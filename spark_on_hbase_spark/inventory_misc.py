@@ -1755,9 +1755,10 @@ _BLOOM_PROBE_KEYS = list(range(3, 1500, 17)) + [10_000_001, 10_000_002, 10_000_0
     "delta layer spans the whole keyspace, so footer min/max stats prune "
     "nothing across layers — the regime HBase keeps per-HFile blooms "
     "for. Each layer's blocked-Bloom sidecar (Putze et al. 2007; one "
-    "md5-chosen 64-bit word, K=4 bits, 10 bits/key, probed by a "
-    "word-equi-join whose In(word) filter footer-prunes the sidecar scan "
-    "to O(keys)) proves most files key-free: present keys read ~one file "
+    "md5-chosen 64-bit word, K=4 bits, 10 bits/key, probed in the "
+    "driver with no Spark job: only the word-sorted sidecar row groups "
+    "whose footer word range holds a probed word are read, so the probe "
+    "is O(keys)) proves most files key-free: present keys read ~one file "
     "per layer that holds them, absent keys read no data file at all. "
     "The fold result must be bit-identical to the plain path (updated "
     "rows at their newest version, tombstoned rows absent) — pruning "

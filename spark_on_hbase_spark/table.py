@@ -563,7 +563,8 @@ class KeyedTable:
         driver-known batches (index maintenance, point lookups).
 
         With ``bloom=True`` (BloomType.ROW — see the Bloom section) the
-        probe first consults each layer's sidecar: min/max footer stats
+        probe first consults each layer's sidecar, in the driver and
+        without a Spark job: min/max footer stats
         prune nothing once several delta layers each span the keyspace,
         but the Bloom proves most of their files key-free, so the multiget
         reads only the files that MAY hold a probed key — HBase's reason
@@ -582,7 +583,12 @@ class KeyedTable:
                     if c is None:
                         frames.append(_cached_layer_df(self.spark, str(p)).where(pred))
                     elif c:
-                        frames.append(self.spark.read.parquet(*c).where(pred))
+                        # the layer's cached schema spares the per-read
+                        # footer-inference job of a schema-less read
+                        schema = _cached_layer_df(self.spark, str(p)).schema
+                        frames.append(
+                            self.spark.read.schema(schema).parquet(*c).where(pred)
+                        )
                 if not frames:
                     # every layer provably key-free: schema-correct empty
                     return self._layer_frames(pred, as_of_layer).where(
@@ -763,16 +769,21 @@ class KeyedTable:
     # - BLOCKED Bloom (Putze/Sanders/Singler 2007, public): each key sets
     #   K=4 bits inside ONE 64-bit word chosen by md5(key) over a layer-wide
     #   word space (nwords ~ rows*10/64), so both the build and the probe
-    #   touch a single word per key, and a probe is a plain equi-JOIN on
-    #   `word` — no driver-side bitmaps, no UDFs, every expression
-    #   whole-stage-codegen'd.
-    # - The sidecar is written SORTED BY word, so a point read's probe
-    #   pushes an In(word) filter whose footer stats prune the sidecar scan
-    #   to O(probe) row groups: consulting the Bloom costs O(keys), never
-    #   O(table), which is what lets it stand in front of a 100 TB layout.
+    #   touch a single word per key.
+    # - The BUILD is one distributed Spark pass (_bloom_cols, no UDFs). The
+    #   PROBE runs in the driver, as HBase checks its blooms inside the
+    #   reader on every Get: _bloom_hashes is the Python twin of
+    #   _bloom_cols (pinned bit-identical by tests/test_table.py), and the
+    #   sidecar is read with pyarrow — no Spark job per probe.
+    # - The sidecar is written SORTED BY word, so the probe reads only the
+    #   sidecar row groups whose footer [min, max] word range holds a probed
+    #   word: consulting the Bloom costs O(keys) row groups, never O(table),
+    #   which is what lets it stand in front of a 100 TB layout.
     # - Correctness NEVER depends on the sidecar: a probe only ever SHRINKS
     #   the file set a point read scans, and a layer whose sidecar is
-    #   missing or stale is simply read in full. Validity is a fingerprint
+    #   missing, stale or unreadable is simply read in full, as is every
+    #   layer when a probed key has no exact Spark string form (the probe
+    #   never guesses a hash). Validity is a fingerprint
     #   check — every part-file currently in the layer must appear in the
     #   sidecar's recorded (name, size) map. The rule is subset-tolerant on
     #   purpose: dirty compaction UNLINKS part-files from old base layers
@@ -789,9 +800,9 @@ class KeyedTable:
     # format (absolute URIs, whose existence check would silently drop every
     # candidate = FALSE NEGATIVES) degrades to a full read instead.
     _BLOOM_FMT = 2
-    _BLOOM_DTYPES = frozenset(
-        {"tinyint", "smallint", "int", "bigint", "string"}
-    )
+    # integral key dtypes -> bit width (the probe's exact-range check)
+    _BLOOM_INT_BITS = {"tinyint": 8, "smallint": 16, "int": 32, "bigint": 64}
+    _BLOOM_DTYPES = frozenset({*_BLOOM_INT_BITS, "string"})
 
     def _bloom_root(self) -> Path:
         return Path(self.path) / "_bloom"
@@ -803,11 +814,12 @@ class KeyedTable:
         (self._bloom_root() / f"{layer.name}.json").unlink(missing_ok=True)
 
     def _bloom_cols(self, key_expr: str, nwords: int) -> list:
-        """(word, mask) Column expressions for one key — shared verbatim by
-        the sidecar build and the probe, so the two sides can never drift.
+        """(word, mask) Column expressions for one key — the sidecar build
+        side; ``_bloom_hashes`` is its driver-side twin for the probe.
         md5 gives 30 hex digits of entropy split into a word selector and
-        four 6-bit in-word bit selectors; everything stays in non-negative
-        int64 (15 hex digits < 2^60)."""
+        four 6-bit in-word bit selectors; the selectors stay in
+        non-negative int64 (15 hex digits < 2^60), while the mask is a
+        signed int64 (bit 63 set makes it negative)."""
         h = f"md5(CAST({key_expr} AS STRING))"
         h2 = f"CAST(conv(substring({h}, 17, 15), 16, 10) AS BIGINT)"
         mask = " | ".join(
@@ -865,10 +877,6 @@ class KeyedTable:
         target = root / layer.name
         tmp = target.with_suffix(".tmp")
         side.write.mode("overwrite").parquet(str(tmp))
-        # a backfill may rewrite an existing sidecar in place; drop any
-        # cached plan handle for it before the swap (r12 — sidecar frames
-        # now ride the layer-DF cache)
-        _invalidate_layer_cache(str(target))
         shutil.rmtree(target, ignore_errors=True)
         tmp.rename(target)
         meta = {
@@ -916,81 +924,140 @@ class KeyedTable:
                 return None
         return meta
 
+    def _bloom_key_bytes(self, key, kdtype: str) -> bytes | None:
+        """UTF-8 bytes of Spark's ``CAST(key AS STRING)`` for a probe key of
+        the table's key dtype, or None when the key has no exact form: a
+        wrong Python type, an integer outside the dtype's range, None, or a
+        string that cannot be encoded (a lone surrogate)."""
+        import numbers
+
+        if kdtype == "string":
+            if not isinstance(key, str):
+                return None
+            try:
+                return key.encode("utf-8")
+            except UnicodeEncodeError:
+                return None
+        bits = self._BLOOM_INT_BITS.get(kdtype)
+        if bits is None or not isinstance(key, numbers.Integral) or isinstance(key, bool):
+            return None
+        k = int(key)
+        if not -(1 << (bits - 1)) <= k < 1 << (bits - 1):
+            return None
+        return str(k).encode("ascii")
+
+    def _bloom_hashes(self, keys: list, kdtype: str) -> list[tuple[int, int]] | None:
+        """Driver-side twin of ``_bloom_cols`` for keys of dtype ``kdtype``:
+        per probe key, the word selector BEFORE ``pmod nwords`` (so one
+        hash serves every sidecar size) and the signed-int64 mask,
+        bit-identical to Spark's. None when any key has no exact Spark
+        string form — the caller then reads every layer in full instead of
+        guessing a hash."""
+        import hashlib
+
+        out = []
+        for key in keys:
+            text = self._bloom_key_bytes(key, kdtype)
+            if text is None:
+                return None
+            h = hashlib.md5(text).hexdigest()
+            h2 = int(h[16:31], 16)
+            mask = 0
+            for i in range(self._BLOOM_K):
+                mask |= 1 << ((h2 // 64**i) % 64)
+            if mask >> 63:
+                mask -= 1 << 64
+            out.append((int(h[:15], 16), mask))
+        return out
+
+    @staticmethod
+    def _bloom_sidecar_rows(side: Path, words: list[int]) -> list[tuple]:
+        """(word, file, bits) rows of one sidecar whose word is in the
+        sorted ``words``. Only the row groups whose footer [min, max] word
+        range holds a probed word are read — the sidecar is word-sorted, so
+        a probe reads O(words) row groups (pyarrow's own ``is_in`` filter
+        does not consult row-group stats). A sidecar with no part-file is
+        unreadable, never empty: Spark writes one even for zero rows."""
+        import bisect
+
+        import pyarrow as pa
+        import pyarrow.compute as pc
+        import pyarrow.parquet as pq
+
+        parts = sorted(side.glob("*.parquet"))
+        if not parts:
+            raise FileNotFoundError(f"no sidecar part-file under {side}")
+        wanted = pa.array(words, pa.int64())
+        out = []
+        for part in parts:
+            with pq.ParquetFile(part) as pf:
+                md = pf.metadata
+                wcol = md.schema.names.index("word")
+                groups = []
+                for g in range(md.num_row_groups):
+                    st = md.row_group(g).column(wcol).statistics
+                    if st is not None and st.has_min_max:
+                        i = bisect.bisect_left(words, st.min)
+                        if i == len(words) or words[i] > st.max:
+                            continue
+                    groups.append(g)
+                if not groups:
+                    continue
+                t = pf.read_row_groups(groups, columns=["word", "file", "bits"])
+            t = t.filter(pc.is_in(t["word"], value_set=wanted))
+            out.extend(zip(*(t[c].to_pylist() for c in ("word", "file", "bits"))))
+        return out
+
     def _bloom_candidates(self, layers: list[Path], keys: list):
         """Per-layer candidate part-file paths from the Bloom sidecars, or
-        None for a layer without a valid sidecar (read it in full). ONE
-        probe job for every layer (r12; guide §1.2/§2.6): word indices are
-        nwords-relative, so the probe keys become (word, mask) rows through
-        the SAME expressions the build used once per distinct nwords, each
-        group's broadcast-join hits are unioned, and a single collect
-        returns every candidate — a multi-layer mixed-size table used to
-        pay one 0.5s driver round trip PER distinct sidecar size (4 of
-        bloom_point_read's ~5s). Sidecar frames come from the layer-DF
-        cache (plan handles; the sidecars live under the table root, so
-        the destructive-op invalidation already covers them). A file is a
-        candidate iff some probed key's whole mask is present in its word
-        — `bits & mask = mask`; absent (file, word) rows mean bits=0,
-        i.e. provably key-free."""
+        None for a layer to read in full: its sidecar is missing, stale or
+        unreadable, or some probed key has no exact Spark string form.
+        Runs in the driver and launches no Spark job: the keys are hashed
+        once (``_bloom_hashes``); word indices are nwords-relative, so each
+        distinct nwords maps the hashes to its words once, and each layer
+        of that size reads only its sidecar rows for those words
+        (``_bloom_sidecar_rows``). A file is a candidate iff some probed
+        key's whole mask is present in its word — ``bits & mask == mask``
+        on signed int64, as the build stored them; absent (file, word)
+        rows mean bits=0, i.e. provably key-free."""
+        import pyarrow as pa
+
         metas = {p: self._bloom_meta(p) for p in layers}
-        out: dict[Path, list[str] | None] = {
-            p: None for p, m in metas.items() if m is None
-        }
+        out: dict[Path, list[str] | None] = {p: None for p in layers}
         by_nwords: dict[int, list[Path]] = {}
         for p, m in metas.items():
             if m is not None:
                 by_nwords.setdefault(m["nwords"], []).append(p)
-                out[p] = []  # provisional: no candidate files
         if not by_nwords:
             return out
-        kdtype = self._schema()[self.key_col]
-        base_probe = self.spark.createDataFrame(
-            [(k,) for k in keys], f"`{self.key_col}` {kdtype}"
-        )
-        all_hits = None
+        hashes = self._bloom_hashes(keys, self._schema()[self.key_col])
+        if hashes is None:
+            return out
         for nwords, group in by_nwords.items():
-            probe = base_probe.select(
-                *self._bloom_cols(f"`{self.key_col}`", nwords)
-            )
-            # sidecars store part-file BASENAMES (rename-relocatable), so
-            # each sidecar frame is tagged with its layer name here
-            side = None
+            masks: dict[int, set[int]] = {}
+            for h1, mask in hashes:
+                masks.setdefault(h1 % nwords, set()).add(mask)
+            words = sorted(masks)
             for p in group:
-                f = _cached_layer_df(
-                    self.spark, str(self._bloom_root() / p.name)
-                ).withColumn("__blayer", F.lit(p.name))
-                side = f if side is None else side.unionByName(f)
-            hit = (
-                side.join(
-                    F.broadcast(
-                        probe.select(
-                            F.col("__bword").alias("word"),
-                            F.col("__bmask").alias("mask"),
-                        )
-                    ),
-                    "word",
-                )
-                .where(F.expr("(bits & mask) = mask"))
-                .select("__blayer", "file")
-            )
-            all_hits = hit if all_hits is None else all_hits.unionByName(hit)
-        # layer names are distinct across nwords groups, so one global
-        # distinct equals the old per-group distinct
-        root = Path(self.path)
-        for r in all_hits.distinct().collect():
-            # The existence check is load-bearing, not hygiene: the
-            # subset-tolerant fingerprint deliberately keeps a sidecar
-            # valid after dirty compaction UNLINKS part-files, so its
-            # rows can still bloom-positive a dead file — reading that
-            # path would throw, and the dead file's keys (if any were
-            # probed) are served by the folded layer that replaced it.
-            layer_dir = root / r["__blayer"]
-            local = str(layer_dir / r["file"])
-            if (
-                layer_dir in out
-                and out[layer_dir] is not None
-                and os.path.exists(local)
-            ):
-                out[layer_dir].append(local)
+                try:
+                    rows = self._bloom_sidecar_rows(self._bloom_root() / p.name, words)
+                except (OSError, ValueError, pa.ArrowException):
+                    # SOFT-fail like the build: an unreadable sidecar only
+                    # costs pruning (the layer stays None), never the read
+                    continue
+                files = {
+                    f for w, f, bits in rows
+                    if any((bits & m) == m for m in masks[w])
+                }
+                # The existence check is load-bearing, not hygiene: the
+                # subset-tolerant fingerprint deliberately keeps a sidecar
+                # valid after dirty compaction UNLINKS part-files, so its
+                # rows can still bloom-positive a dead file — reading that
+                # path would throw, and the dead file's keys (if any were
+                # probed) are served by the folded layer that replaced it.
+                out[p] = [
+                    str(p / f) for f in sorted(files) if os.path.exists(p / f)
+                ]
         return out
 
     # -- mutations ---------------------------------------------------------

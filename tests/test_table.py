@@ -1011,6 +1011,107 @@ def test_bloom_point_read_respects_as_of_layer(spark, tmp_path):
     assert k_deleted in got, "tombstone is younger than the snapshot"
 
 
+def test_bloom_hashes_bit_identical_to_spark(spark, tmp_path):
+    """The driver-side probe hash (_bloom_hashes) must equal the build's
+    Spark expressions (_bloom_cols) bit for bit — a drift would turn into
+    false negatives. Every bloomable dtype at its extremes, negatives,
+    empty and non-ASCII strings, several word-space sizes, and masks with
+    bit 63 set (negative as int64)."""
+    tbl = KeyedTable(spark, str(tmp_path / "h"), key_col="k")
+    cases = {
+        "tinyint": [-128, -1, 0, 1, 127],
+        "smallint": [-(2**15), -7, 0, 300, 2**15 - 1],
+        "int": [-(2**31), -12345, 0, 99, 2**31 - 1],
+        "bigint": [-(2**63), -1, *range(200), 2**63 - 1],
+        "string": ["", "a", "key-000042", "naïve", "日本語", "emoji 🚀", "x" * 300],
+    }
+    assert set(cases) == set(KeyedTable._BLOOM_DTYPES)
+    saw_bit63 = False
+    for dtype, keys in cases.items():
+        hashes = tbl._bloom_hashes(keys, dtype)
+        assert hashes is not None, dtype
+        kdf = spark.createDataFrame([(k,) for k in keys], f"k {dtype}")
+        for nwords in (64, 1563, 10**12 + 39):
+            got = [(h1 % nwords, mask) for h1, mask in hashes]
+            want = [
+                (r["__bword"], r["__bmask"])
+                for r in kdf.select(*tbl._bloom_cols("`k`", nwords)).collect()
+            ]
+            assert got == want, (dtype, nwords)
+        saw_bit63 |= any(mask < 0 for _, mask in hashes)
+    assert saw_bit63, "no probed mask exercised bit 63"
+
+
+def test_bloom_probe_refuses_keys_without_exact_string_form(spark, tmp_path):
+    """Keys whose Spark string cast the driver cannot reproduce exactly
+    get no hash at all (the probe never guesses)."""
+    tbl = KeyedTable(spark, str(tmp_path / "h"), key_col="k")
+    for keys, dtype in [
+        ([1, None], "bigint"),
+        (["5"], "bigint"),
+        ([True], "int"),
+        ([2.0], "bigint"),
+        ([128], "tinyint"),
+        ([-(2**15) - 1], "smallint"),
+        ([2**31], "int"),
+        ([2**63], "bigint"),
+        ([5], "string"),
+        (["\ud800"], "string"),
+        ([1], "double"),
+    ]:
+        assert tbl._bloom_hashes(keys, dtype) is None, (keys, dtype)
+
+
+def test_bloom_probe_launches_no_spark_job(spark, tmp_path):
+    """Building a bloomed multiget runs the sidecar probe in the driver:
+    no Spark job once the layers are open (a layer's schema is inferred
+    once per layer lifetime, as on the plain path). Keys the probe cannot
+    hash — wrong type, None — read every layer in full and return what
+    the plain path returns."""
+    tbl, plain = _bloom_pair(spark, tmp_path, n=1000)
+    tbl.df()  # open every layer (the cached per-layer DataFrames)
+    sc = spark.sparkContext
+    group = f"bloom-probe-{id(tmp_path)}"
+    sc.setJobGroup(group, "bloomed point_read construction")
+    try:
+        df = tbl.point_read([3, 97 + 1, 500, 77_000_001])
+        jobs = sc.statusTracker().getJobIdsForGroup(group)
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setJobDescription(None)
+    assert jobs == [], f"bloom probe launched Spark jobs {jobs}"
+    want = plain.point_read([3, 97 + 1, 500, 77_000_001]).collect()
+    assert sorted(df.collect()) == sorted(want)
+
+    layers = tbl._visible_layers(None)
+    for keys in (["500"], [500, None], [None]):
+        assert all(v is None for v in tbl._bloom_candidates(layers, keys).values())
+        got = sorted(tbl.point_read(keys).collect())
+        assert got == sorted(plain.point_read(keys).collect()), keys
+    assert len(tbl.point_read(["500"]).collect()) == 1
+
+
+def test_bloom_unreadable_sidecar_degrades_to_full_read(spark, tmp_path):
+    """A sidecar part-file that cannot be read (truncated) while its meta
+    stays valid marks only THAT layer for a full read — reads never
+    depend on sidecar health."""
+    tbl, plain = _bloom_pair(spark, tmp_path, n=1000)
+    layers = tbl._visible_layers(None)
+    base = layers[0]
+    assert tbl._bloom_meta(base) is not None
+    for part in (tbl._bloom_root() / base.name).glob("*.parquet"):
+        data = part.read_bytes()
+        part.write_bytes(data[: len(data) // 2])
+    assert tbl._bloom_meta(base) is not None, "meta alone cannot see the damage"
+    keys = [3, 98, 500, 606, 999, 77_000_001]
+    cands = tbl._bloom_candidates(layers, keys)
+    assert cands[base] is None
+    assert all(cands[p] is not None for p in layers[1:])
+    got = sorted(tbl.point_read(keys).collect())
+    assert got == sorted(plain.point_read(keys).collect())
+    assert len(got) == 5
+
+
 def test_changes_feed_types_every_mutation_kind(spark, table):
     """KeyedTable.changes — the table-native mutation feed (the reference
     ships the same stream through its Kafka proxy; the LSM layers already
